@@ -297,33 +297,17 @@ object Database {
     if (target.isFile) {
       // .sql dumps are the reference's native input (connection.py:64-78,
       // utils.py:242-265) — replayed here by graft.sources.SqlDump instead
-      // of SQLite. Binary .db opens through graft.sources.SqliteJdbc WHEN a
-      // sqlite-jdbc driver jar is on the classpath (the build itself stays
-      // zero-dep); otherwise fail loudly with the `.dump` workaround.
-      if (dir.endsWith(".sql")) {
-        val tableMap = graft.sources.SqlDump.open(spark, dir)
-        tableMap.foreach { case (n, df) => df.createOrReplaceTempView(n) }
-        val fileViews = registerFileViews(spark, tableMap.keySet,
-          graft.sources.SqlDump.viewDefs(spark, dir))
-        val qc = new QueryCache(cacheEnabled, maxItemMb, maxTotalMb)
-        val fp = sourceFingerprint(Seq(target))
-        if (cacheDir != null) qc.loadFrom(spark, cacheDir, Some(fp))
-        val db = new Database(spark, tableMap, qc, dir, Option(cacheDir), fp)
-        db.adoptFileViews(fileViews)
-        return db
-      }
-      if (Seq(".db", ".sqlite", ".sqlite3").exists(dir.endsWith)) {
-        // JDBC route when a sqlite-jdbc jar happens to be on the classpath
-        // (it streams table scans); otherwise graft's own pure-JVM reader
-        // parses the b-tree pages directly — the reference's direct-.db
-        // open (connection.py:64-78) with zero added dependencies either way
-        val jdbc = graft.sources.SqliteJdbc.driverAvailable
+      // of SQLite. Binary .db files open through graft's own pure-JVM
+      // reader, one lazy `graft-sqlite` scan per table
+      // (graft.sources.SqliteFile.open).
+      val isDump = dir.endsWith(".sql")
+      if (isDump || Seq(".db", ".sqlite", ".sqlite3").exists(dir.endsWith)) {
         val tableMap =
-          if (jdbc) graft.sources.SqliteJdbc.open(spark, dir)
+          if (isDump) graft.sources.SqlDump.open(spark, dir)
           else graft.sources.SqliteFile.open(spark, dir)
         tableMap.foreach { case (n, df) => df.createOrReplaceTempView(n) }
         val fileViews = registerFileViews(spark, tableMap.keySet,
-          if (jdbc) graft.sources.SqliteJdbc.views(dir)
+          if (isDump) graft.sources.SqlDump.viewDefs(spark, dir)
           else graft.sources.SqliteFile.views(dir))
         val qc = new QueryCache(cacheEnabled, maxItemMb, maxTotalMb)
         val fp = sourceFingerprint(Seq(target))

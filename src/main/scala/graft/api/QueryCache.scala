@@ -4,6 +4,9 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, LogicalPlan}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.util.SizeEstimator
 
 /** Driver-side memo for scalar/small aggregate results, mirroring the
@@ -42,9 +45,17 @@ final class QueryCache(
   // aggregate insertion cost O(n²))
   private val storedBytes = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Canonical cache key for a DataFrame's logical plan. */
-  def keyOf(df: DataFrame): String =
-    df.queryExecution.analyzed.canonicalized.toString
+  /** Canonical cache key for a DataFrame's logical plan: the canonicalized
+    * plan, then the source identity of every leaf ([[QueryCache.sourceOf]]).
+    * The canonical string alone names no source — `sum(v)` over two
+    * same-schema parquet tables printed the same key.
+    */
+  def keyOf(df: DataFrame): String = {
+    val plan = df.queryExecution.analyzed
+    (plan.canonicalized.toString +: plan.collectWithSubqueries {
+      case leaf: LeafNode => QueryCache.sourceOf(leaf)
+    }.flatten).mkString("\n")
+  }
 
   private def mbOf(v: Any): Double = SizeEstimator.estimate(v.asInstanceOf[AnyRef]) / 1e6
 
@@ -201,6 +212,21 @@ final class QueryCache(
 }
 
 object QueryCache {
+  /** What a leaf reads, where its printed plan does not say: the root paths
+    * of a file relation, a content hash of a local relation (both stable
+    * across sessions, as spilled keys must be), the id of an RDD-backed
+    * relation (session-local: such keys never match after a reload). V2
+    * relations print their table's name, so they need nothing added.
+    */
+  private def sourceOf(leaf: LogicalPlan): Option[String] = leaf match {
+    case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+      Some(fs.location.rootPaths.mkString("files ", ",", ""))
+    case l: LocalRelation =>
+      Some(s"local ${l.data.length} ${scala.util.hashing.MurmurHash3.seqHash(l.data)}")
+    case r: LogicalRDD => Some(s"rdd ${r.rdd.id}")
+    case _ => None
+  }
+
   // top-level so the pattern-match type test needs no outer-instance check
   private[api] final case class Entry(value: Any, bytes: Long)
 }

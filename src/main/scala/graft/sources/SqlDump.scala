@@ -21,10 +21,9 @@ import org.apache.spark.sql.types._
   *    text, then cast column-wise from the parsed strings to the DDL
   *    types. No driver-side row loop at any size.
   *
-  * The binary SQLite `.db` format is handled separately: [[SqliteJdbc]]
-  * when a driver jar is on the classpath, [[SqliteFile]] (pure-JVM b-tree
-  * reader) otherwise — this build deliberately adds no dependencies
-  * beyond Spark (README "Interchange formats").
+  * The binary SQLite `.db` format is handled separately by [[SqliteFile]]
+  * (pure-JVM b-tree reader) — this build deliberately adds no
+  * dependencies beyond Spark (README "Interchange formats").
   *
   * Type affinities follow SQLite's text-first model so results match the
   * reference: integer-family → long, numeric/decimal(p,s) → decimal,

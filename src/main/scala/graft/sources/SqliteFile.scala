@@ -13,10 +13,7 @@ import graft.api.FileTypeError
   * native library, no dependency: the on-disk format is public and frozen
   * (sqlite.org/fileformat2.html), so the `.db`/`.sqlite`/`.sqlite3` files
   * the reference opens directly (reference: connection.py:64-78) open here
-  * by parsing the b-tree pages themselves. This replaces the fail-loud
-  * FileTypeError path that previous rounds shipped when no sqlite-jdbc jar
-  * was present; [[SqliteJdbc]] remains the preferred route WHEN a driver
-  * jar is on the classpath (it streams instead of materializing).
+  * by parsing the b-tree pages themselves.
   *
   * Scope (fail-loud beyond it, never silently wrong):
   *  - ordinary rowid tables: table b-trees (leaf 0x0d / interior 0x05),
@@ -31,57 +28,43 @@ import graft.api.FileTypeError
   *    journals, and virtual tables raise FileTypeError with the
   *    `.dump` workaround.
   *
-  * Scale note, same as [[SqlDump]]/[[SqliteJdbc]]: a SQLite file is an
-  * inherently single-reader, single-node artifact. Rows are decoded
-  * driver-side page-by-page (bounded memory per page; the file itself is
-  * never loaded whole). [[open]] hands them to Spark as local relations
-  * and REFUSES files past `maxOpenBytes` (the decoded rows, not the
-  * decode, are what would OOM the driver); past the guard, [[ingest]]
-  * streams each table to parquet in bounded row batches — ingest-once as
-  * an operation, not advice. Schema mapping reuses [[SqlDump.parseDdl]] on the CREATE
-  * statements stored in `sqlite_master`, so a `.db` and its `.dump` twin
-  * open with IDENTICAL schemas (hash-compared in SqliteFileSpec) — except
-  * BLOB columns, which the binary reader can represent faithfully as
-  * BinaryType where a textual dump cannot.
+  * [[open]] decodes nothing on the driver: each table is a `graft-sqlite`
+  * DataSourceV2 read ([[graft.sources.sqlitev2.SqliteDataSource]]) whose
+  * scan tasks walk disjoint subtrees of the table's b-tree executor-side,
+  * so driver memory does not grow with the file. [[ingest]] streams each
+  * table to parquet in bounded row batches for files that are queried
+  * often enough to want a columnar copy. Schema mapping reuses
+  * [[SqlDump.parseDdl]] on the CREATE statements stored in `sqlite_master`,
+  * so a `.db` and its `.dump` twin open with IDENTICAL schemas
+  * (hash-compared in SqliteFileSpec) — except BLOB columns, which the
+  * binary reader can represent faithfully as BinaryType where a textual
+  * dump cannot.
   */
 object SqliteFile {
 
-  /** Above this file size, [[open]] refuses to materialize driver-side
-    * local relations and directs the caller to [[ingest]] — decoded rows
-    * for a multi-GB file would OOM the driver long before the
-    * "ingest-once to parquet" advice in the scaladoc could apply.
-    * Overridable per call; 256 MB keeps every plausible fixture/config
-    * database under the fast path.
+  /** Every table of the file as a lazy `graft-sqlite` read. Each load
+    * decodes that table's DDL, so a file the reader cannot serve (bad
+    * magic, hot journal, virtual table, unparseable DDL) fails here with
+    * FileTypeError; row decoding happens in the scan tasks.
     */
-  val DefaultMaxOpenBytes: Long = 256L << 20
-
-  def open(spark: SparkSession, path: String,
-      maxOpenBytes: Long = DefaultMaxOpenBytes): Map[String, DataFrame] = {
-    val fileLen = new java.io.File(path).length()
-    if (fileLen > maxOpenBytes)
-      throw new FileTypeError(
-        s"'$path' is $fileLen bytes (> $maxOpenBytes): opening would " +
-          "materialize every row on the driver. Ingest it to parquet " +
-          "instead — graft.sources.SqliteFile.ingest(spark, path, outDir) " +
-          "streams the decode in bounded row batches and returns " +
-          "parquet-backed DataFrames (or raise maxOpenBytes explicitly " +
-          "if the driver heap really has room).")
-    openUnchecked(spark, path)
-  }
+  def open(spark: SparkSession, path: String): Map[String, DataFrame] =
+    tableNames(path).map { t =>
+      t -> spark.read.format("graft-sqlite").option("table", t).load(path)
+    }.toMap
 
   /** Streaming access to ONE table for the `graft-sqlite` DSv2 connector
     * ([[graft.sources.sqlitev2.SqliteDataSource]]): (schema, lazy row
-    * iterator, closer). Unlike [[open]], nothing is materialized — the
-    * connector pulls this iterator EXECUTOR-side, so file size bounds
-    * nothing but the scan's wall-clock (no driver guard needed). The
-    * caller owns the closer and must invoke it after consuming (or
-    * abandoning) the iterator.
+    * iterator, closer). The iterator walks the subtrees rooted at `roots`
+    * in order (the whole b-tree when None); the connector pulls it
+    * EXECUTOR-side. The caller owns the closer and must invoke it after
+    * consuming (or abandoning) the iterator.
     */
-  private[sources] def streamTable(path: String, table: String)
+  private[sources] def streamTable(path: String, table: String,
+      roots: Option[Seq[Int]] = None)
       : (org.apache.spark.sql.types.StructType, Iterator[Row], () => Unit) = {
     val db = new Reader(path)
     val found = try {
-      tableIterators(db, path, only = Some(table)).headOption.getOrElse(
+      tableIterators(db, path, only = Some(table), roots).headOption.getOrElse(
         // name listing only — never validates (or decodes) other tables
         throw new FileTypeError(
           s"table '$table' not found in '$path' — available: " +
@@ -100,33 +83,40 @@ object SqliteFile {
 
   /** Names of every user table in the file, in sqlite_master order —
     * schema-page listing only, no per-table validation or decoding (a
-    * virtual table IS listed here; it fails loud on read). Backs the
-    * `graft-sqlite` catalog's `SHOW TABLES`.
+    * virtual table IS listed here; it fails loud on read). Backs
+    * [[open]] and the `graft-sqlite` catalog's `SHOW TABLES`.
     */
   private[sources] def tableNames(path: String): Seq[String] = {
     val db = new Reader(path)
     try db.masterTables().map(_._1) finally db.close()
   }
 
-  private def openUnchecked(spark: SparkSession, path: String):
-      Map[String, DataFrame] = {
+  /** How a scan of `table` splits: (subtree roots in key order, bytes of
+    * the table's b-tree pages). The driver reads the interior levels top-down;
+    * the roots are the first level holding at least `target` pages, or the
+    * leaves when the tree is shallower. Walking the roots in order yields
+    * the table in rowid order. A WITHOUT ROWID table is never split — its
+    * interior cells hold rows, so its only root is the tree root. The size
+    * reads interior pages only (a leaf level is counted from its parents'
+    * pointers) and leaves out overflow pages.
+    */
+  private[sources] def scanLayout(path: String, table: String, target: Int)
+      : (Seq[Int], Long) = {
     val db = new Reader(path)
     try {
-      import scala.jdk.CollectionConverters._
-      tableIterators(db, path).map { case (name, schema, rowIt) =>
-        name -> spark.createDataFrame(rowIt.toSeq.asJava, schema)
-      }.toMap
+      val (_, root, sql) = db.masterTables().find(_._1 == table).getOrElse(
+        throw new FileTypeError(s"table '$table' not found in '$path'"))
+      val (roots, pages) =
+        db.treeShape(root, if (withoutRowid(sql)) 1 else target)
+      (roots, pages * db.pageSize)
     } finally db.close()
   }
 
   /** Ingest-once made real: decode each table STREAMING — `batchRows`
     * rows on the driver at a time, each batch appended to
     * `outDir/<table>/` as parquet — and return parquet-backed
-    * DataFrames. This is the path for `.db` files past [[open]]'s
-    * size guard: driver memory is bounded by one batch regardless of
-    * file size (the page decoder underneath was always incremental;
-    * this stops the driver from holding the DECODED rows whole).
-    * Any prior ingest of the same table dir is replaced.
+    * DataFrames: driver memory is bounded by one batch regardless of
+    * file size. Any prior ingest of the same table dir is replaced.
     */
   def ingest(spark: SparkSession, path: String, outDir: String,
       batchRows: Int = 500000): Map[String, DataFrame] = {
@@ -182,10 +172,11 @@ object SqliteFile {
 
   /** Per-table (name, schema, streaming row iterator) for every table in
     * the file. Iterators decode lazily off the open [[Reader]] — the
-    * caller must fully consume them BEFORE closing it.
+    * caller must fully consume them BEFORE closing it. `roots` restricts
+    * the walk to those subtrees of the table's b-tree ([[scanLayout]]).
     */
   private[sources] def tableIterators(db: Reader, path: String,
-      only: Option[String] = None):
+      only: Option[String] = None, roots: Option[Seq[Int]] = None):
       Seq[(String, StructType, Iterator[Row])] = {
       // `only` restricts BEFORE any per-table validation: the connector's
       // single-table read must not fail because an UNRELATED table in the
@@ -193,17 +184,7 @@ object SqliteFile {
       val tables = db.masterTables()
         .filter(t => only.forall(_ == t._1))
       tables.map { case (name, rootPage, createSql) =>
-        // split the DDL at the paren that CLOSES the column-list body
-        // (comment/quote-aware — lastIndexOf(')') would be fooled by a
-        // trailing comment containing one). Table options after it:
-        // WITHOUT ROWID in any combination/order with STRICT (3.37+
-        // allows "WITHOUT ROWID, STRICT"). STRICT alone is fine — strict
-        // tables are ordinary rowid tables on disk.
         val bodyEndIdx = bodyEnd(createSql)
-        val tableOpts =
-          if (bodyEndIdx >= 0) createSql.substring(bodyEndIdx + 1) else ""
-        val withoutRowid =
-          "(?is).*\\bwithout\\s+rowid\\b.*".r.matches(stripComments(tableOpts))
         // virtual tables (FTS, rtree, …) have no b-tree of their own —
         // rootpage 0 — and their content lives in module shadow tables
         if (rootPage <= 0)
@@ -230,8 +211,9 @@ object SqliteFile {
         // them (NULL when none). Mirror that: pre-decode each column's
         // DEFAULT literal from the DDL once.
         val defaults: Seq[Any] = cols.map(c => defaultLiteral(c.sqlType))
+        val pages = roots.getOrElse(Seq(rootPage)).iterator
         val rows: Iterator[Row] =
-          if (withoutRowid) {
+          if (withoutRowid(createSql)) {
             // Index-b-tree layout: each entry's record holds the PRIMARY
             // KEY columns first (in PK-declaration order), then the
             // remaining columns in CREATE TABLE order. ALTER ADD COLUMN
@@ -250,7 +232,7 @@ object SqliteFile {
               perm.zipWithIndex.foreach { case (decl, pos) => a(decl) = pos }
               a
             }
-            db.indexRows(rootPage).map { rec =>
+            pages.flatMap(db.indexRows).map { rec =>
               val vals = fields.zipWithIndex.map { case (f, i) =>
                 val pos = posInRecord(i)
                 val raw = if (pos < rec.length) rec(pos) else defaults(i)
@@ -260,7 +242,7 @@ object SqliteFile {
             }
           } else {
             val ipkIdx = rowidAliasIndex(cols, createSql)
-            db.tableRows(rootPage).map { case (rowid, rec) =>
+            pages.flatMap(db.tableRows).map { case (rowid, rec) =>
               val vals = fields.zipWithIndex.map { case (f, i) =>
                 val raw =
                   if (i == ipkIdx) java.lang.Long.valueOf(rowid)
@@ -273,6 +255,18 @@ object SqliteFile {
           }
         (name, schema, rows)
       }
+  }
+
+  /** True when the table options after the column-list body say WITHOUT
+    * ROWID, in any combination/order with STRICT (3.37+ allows "WITHOUT
+    * ROWID, STRICT"). STRICT alone is an ordinary rowid table on disk. The
+    * body ends at the paren that CLOSES it (comment/quote-aware —
+    * lastIndexOf(')') would be fooled by a trailing comment holding one).
+    */
+  private def withoutRowid(createSql: String): Boolean = {
+    val end = bodyEnd(createSql)
+    val tableOpts = if (end >= 0) createSql.substring(end + 1) else ""
+    "(?is).*\\bwithout\\s+rowid\\b.*".r.matches(stripComments(tableOpts))
   }
 
   /** The `CREATE VIEW` statements stored in the file, parsed to
@@ -589,8 +583,8 @@ object SqliteFile {
     }
   }
 
-  /** Page-at-a-time binary reader. Not thread-safe (one shared transfer
-    * buffer per page read); open() uses it from the driver thread only.
+  /** Page-at-a-time binary reader. Not thread-safe: each user (a scan
+    * task, a driver-side listing or ingest) opens its own.
     */
   private final class Reader(path: String) {
     private val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
@@ -713,15 +707,53 @@ object SqliteFile {
             readLeafCell(pg, cellOff)
           }
         case 0x05 => // table interior: left children + rightmost pointer
-          val kids = (0 until nCells).map { i =>
-            val cellOff = pg.getShort(hdr + 12 + 2 * i) & 0xffff
-            pg.getInt(cellOff)
-          } :+ pg.getInt(hdr + 8)
-          kids.iterator.flatMap(walk)
+          children(pg, hdr, nCells).iterator.flatMap(walk)
         case other =>
           fail(f"page $pageNo: unexpected b-tree page type 0x$other%02x" +
             " in a table tree (corrupt file or index root)")
       }
+    }
+
+    /** Child page numbers of an interior page, left to right: each cell's
+      * 4-byte left child, then the rightmost pointer. Table (0x05) and
+      * index (0x02) interior pages share this layout.
+      */
+    private def children(pg: ByteBuffer, hdr: Int, nCells: Int): Seq[Int] =
+      (0 until nCells).map { i =>
+        pg.getInt(pg.getShort(hdr + 12 + 2 * i) & 0xffff)
+      } :+ pg.getInt(hdr + 8)
+
+    /** Children of page `n`, or None when it is a leaf. */
+    private def childPages(n: Int): Option[Seq[Int]] = {
+      val pg = page(n)
+      val hdr = if (n == 1) 100 else 0
+      pg.get(hdr) & 0xff match {
+        case 0x05 | 0x02 => Some(children(pg, hdr, pg.getShort(hdr + 3) & 0xffff))
+        case 0x0d | 0x0a => None
+        case other => fail(f"page $n: unexpected b-tree page type 0x$other%02x")
+      }
+    }
+
+    /** (roots, pages) of the b-tree at `root`, read one level at a time:
+      * the roots are the first level with at least `target` pages, else
+      * the leaves; pages counts every level. B-trees are balanced, so a
+      * level is all interior or all leaves and the leaf level is counted
+      * from its parents without reading it (only its first page is read,
+      * to learn that it is the leaf level).
+      */
+    def treeShape(root: Int, target: Int): (Seq[Int], Long) = {
+      var level = Seq(root)
+      var kids = childPages(root)
+      var roots = Option.empty[Seq[Int]]
+      var pages = 0L
+      while (kids.isDefined) {
+        if (roots.isEmpty && level.size >= target) roots = Some(level)
+        pages += level.size
+        level = kids.get ++ level.tail.flatMap(p => childPages(p).getOrElse(
+          fail(s"page $p: leaf beside interior pages (unbalanced b-tree)")))
+        kids = childPages(level.head)
+      }
+      (roots.getOrElse(level), pages + level.size)
     }
 
     /** Decode one table-leaf cell: payload length, rowid, record (following

@@ -35,8 +35,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Scale note: catalog metadata calls (SHOW TABLES, schema inference)
   * decode only the sqlite_master page chain — O(schema), never O(data).
-  * The data path is the connector's single-partition stream; for files
-  * past config size, `SqliteFile.ingest` to parquet remains the play.
+  * The data path is the connector's split scan; for files queried often
+  * enough to want a columnar copy, `SqliteFile.ingest` writes parquet.
   */
 class SqliteCatalog extends TableCatalog with SupportsNamespaces {
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownRequiredColumns, SupportsReportStatistics}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -22,22 +22,22 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   .option("table", "forests").load("data/forestation.db")
   * }}}
   *
-  * What this adds over `SqliteFile.open` (which materializes every row on
-  * the driver and guards itself with `maxOpenBytes`): the decode runs
-  * EXECUTOR-side inside the scan task, streaming pages through the
-  * b-tree walker one row at a time — driver memory is O(1) for any file
-  * size, so the connector has no size guard at all. Column pruning drops
-  * unused fields before the Catalyst conversion (the page decode itself
-  * is whole-record by format: SQLite serializes each record as one
+  * It is the one reader behind `graft.api.Database.open` on a `.db` file
+  * (via `SqliteFile.open`). The decode runs EXECUTOR-side inside the scan
+  * tasks, streaming pages through the b-tree walker one row at a time —
+  * driver memory is O(1) for any file size. Column pruning drops unused
+  * fields before the Catalyst conversion (the page decode itself is
+  * whole-record by format: SQLite serializes each record as one
   * varint-headed blob).
   *
-  * What it deliberately does NOT do: multi-task parallelism. A SQLite
-  * file is one page chain behind one file handle; the scan is a single
-  * InputPartition by design (same class of source as a gzip stream).
-  * At 100 TB scale the play is unchanged — `SqliteFile.ingest` once to
-  * parquet and let every later query scan that in parallel; this
-  * connector is for the config/metadata-sized `.db` files the reference
-  * serves directly, minus the driver bottleneck.
+  * Parallelism: a rowid table's b-tree splits into disjoint subtrees
+  * (`SqliteFile.scanLayout`: the first interior level with at least
+  * `defaultParallelism` pages), and each task walks a contiguous run of
+  * them, so partition order is rowid order and positional operators
+  * (`limit`, `zipWithIndex`, `iloc`) keep base order. A WITHOUT ROWID
+  * table is one task: its interior index cells hold rows, so its subtrees
+  * are not a partition of its rows. The scan reports the table's page
+  * bytes as its size, so joins against small `.db` tables broadcast.
   */
 class SqliteDataSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
@@ -128,20 +128,39 @@ class SqliteScanBuilder(path: String, table: String, full: StructType)
 }
 
 class SqliteScan(path: String, table: String, full: StructType,
-    required: StructType) extends Scan with Batch {
+    required: StructType) extends Scan with Batch with SupportsReportStatistics {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
     s"graft-sqlite $path#$table (${required.fieldNames.mkString(", ")})"
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(SqlitePartition(path, table,
-      required.fieldNames.map(full.fieldIndex)))
+
+  private lazy val tasks =
+    org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism
+  // (subtree roots in rowid order, page bytes): read once per scan, on the
+  // driver, from the interior pages only
+  private lazy val (roots, bytes) =
+    graft.sources.SqliteFile.scanLayout(path, table, tasks)
+
+  override def estimateStatistics(): Statistics = new Statistics {
+    override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(bytes)
+    override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
+  }
+
+  /** Contiguous runs of subtree roots, at most `defaultParallelism` of them. */
+  override def planInputPartitions(): Array[InputPartition] = {
+    val n = roots.length
+    val parts = math.min(n, tasks)
+    val colIdx = required.fieldNames.map(full.fieldIndex)
+    Array.tabulate[InputPartition](parts)(i => SqlitePartition(path, table,
+      colIdx, roots.slice(i * n / parts, (i + 1) * n / parts).toArray))
+  }
   override def createReaderFactory(): PartitionReaderFactory =
     SqliteReaderFactory(required)
 }
 
+/** One scan task: the subtrees rooted at `roots`, walked in order. */
 case class SqlitePartition(path: String, table: String,
-    colIdx: Array[Int]) extends InputPartition
+    colIdx: Array[Int], roots: Array[Int]) extends InputPartition
 
 case class SqliteReaderFactory(required: StructType)
     extends PartitionReaderFactory {
@@ -149,14 +168,14 @@ case class SqliteReaderFactory(required: StructType)
     new SqliteRowReader(p.asInstanceOf[SqlitePartition], required)
 }
 
-/** Streams the table's b-tree leaves through the shared page decoder,
+/** Streams the partition's subtrees through the shared page decoder,
   * projecting each decoded record to the pruned column set and handing
   * Catalyst one InternalRow at a time.
   */
 class SqliteRowReader(p: SqlitePartition, required: StructType)
     extends PartitionReader[InternalRow] {
   private val (_, rows, closer) =
-    graft.sources.SqliteFile.streamTable(p.path, p.table)
+    graft.sources.SqliteFile.streamTable(p.path, p.table, Some(p.roots.toSeq))
   private val convert =
     CatalystTypeConverters.createToCatalystConverter(required)
   private val idx: Array[Int] = p.colIdx // hoisted out of the per-row loop

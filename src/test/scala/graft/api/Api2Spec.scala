@@ -13,38 +13,47 @@ class Api2Spec extends SparkSuite {
 
   lazy val db: Database = Database.open(spark, sfDir)
 
+  /** A fresh temp dir for one test, deleted when the test ends. */
+  private def withTempDir[T](prefix: String)(body: String => T): T = {
+    val dir = Files.createTempDirectory(prefix).toFile
+    try body(dir.toString) finally graft.ops.Layout.deleteRecursively(dir)
+  }
+
   test("CSV ingestion (reference convert_csvs_to_db, utils.py:214-239)") {
-    val dir = Files.createTempDirectory("graftcsv").toString
-    Files.write(java.nio.file.Paths.get(dir, "people.csv"),
-      "id,name,score\n1,ann,9.5\n2,bob,7.25\n3,cy,\n".getBytes)
-    val cdb = Database.open(spark, dir)
-    assert(cdb.tables == Seq("people"))
-    val t = cdb("people")
-    assert(t.len == 3)
-    assert(t.col("score").nullCount == 1)
-    assert(t.col("score").sum == 16.75)
-    cdb.exit()
+    withTempDir("graftcsv") { dir =>
+      Files.write(java.nio.file.Paths.get(dir, "people.csv"),
+        "id,name,score\n1,ann,9.5\n2,bob,7.25\n3,cy,\n".getBytes)
+      val cdb = Database.open(spark, dir)
+      assert(cdb.tables == Seq("people"))
+      val t = cdb("people")
+      assert(t.len == 3)
+      assert(t.col("score").nullCount == 1)
+      assert(t.col("score").sum == 16.75)
+      cdb.exit()
+    }
   }
 
   test("CSV header/table-name sanitization (reference utils.py:233-238: ' '/'-' -> '_', lowercase)") {
-    val dir = Files.createTempDirectory("graftcsvnorm").toString
-    Files.write(java.nio.file.Paths.get(dir, "First Survey-2024.csv"),
-      "First Name,Last-Name,Total Score\nann,lee,9.5\nbob,ray,7.0\n".getBytes)
-    val cdb = Database.open(spark, dir)
-    assert(cdb.tables == Seq("First_Survey_2024")) // stem: separators only, case kept
-    val t = cdb("First_Survey_2024")
-    assert(t.columns == Seq("first_name", "last_name", "total_score"))
-    assert(t.col("total_score").sum == 16.5)
-    // the sanitized names are SQL-addressable through the registered view
-    assert(cdb.query(
-      "SELECT first_name FROM First_Survey_2024 ORDER BY total_score DESC")
-      .head.getString(0) == "ann")
-    cdb.exit()
+    withTempDir("graftcsvnorm") { dir =>
+      Files.write(java.nio.file.Paths.get(dir, "First Survey-2024.csv"),
+        "First Name,Last-Name,Total Score\nann,lee,9.5\nbob,ray,7.0\n".getBytes)
+      val cdb = Database.open(spark, dir)
+      assert(cdb.tables == Seq("First_Survey_2024")) // stem: separators only, case kept
+      val t = cdb("First_Survey_2024")
+      assert(t.columns == Seq("first_name", "last_name", "total_score"))
+      assert(t.col("total_score").sum == 16.5)
+      // the sanitized names are SQL-addressable through the registered view
+      assert(cdb.query(
+        "SELECT first_name FROM First_Survey_2024 ORDER BY total_score DESC")
+        .head.getString(0) == "ann")
+      cdb.exit()
+    }
   }
 
   test("FileTypeError on directory without tables") {
-    val dir = Files.createTempDirectory("graftempty").toString
-    intercept[FileTypeError](Database.open(spark, dir))
+    withTempDir("graftempty") { dir =>
+      intercept[FileTypeError](Database.open(spark, dir))
+    }
   }
 
   test("views: createView registers, exit drops base views") {
@@ -152,17 +161,19 @@ class Api2Spec extends SparkSuite {
   }
 
   test("populateCache warms scalar stats for every column (cache.py:94-125)") {
-    val dir = Files.createTempDirectory("graftwarm").toString
-    import spark.implicits._
-    Seq((1L, "a", 2.0), (2L, "b", 3.5)).toDF("id", "s", "v")
-      .write.parquet(s"$dir/t.parquet")
-    val wdb = Database.open(spark, dir, populateCache = true)
-    val before = wdb.cache.size
-    assert(before > 0)
-    // a warmed aggregate is a cache hit: size does not grow
-    wdb("t").col("v").sum
-    wdb("t").col("s").valueCounts
-    assert(wdb.cache.size == before)
+    withTempDir("graftwarm") { dir =>
+      import spark.implicits._
+      Seq((1L, "a", 2.0), (2L, "b", 3.5)).toDF("id", "s", "v")
+        .write.parquet(s"$dir/t.parquet")
+      val wdb = Database.open(spark, dir, populateCache = true)
+      val before = wdb.cache.size
+      assert(before > 0)
+      // a warmed aggregate is a cache hit: size does not grow
+      wdb("t").col("v").sum
+      wdb("t").col("s").valueCounts
+      assert(wdb.cache.size == before)
+      wdb.exit()
+    }
   }
 
   test("dynamic attribute access: db.dyn.orders.o_totalprice (SURVEY §7.4.6)") {
@@ -253,89 +264,120 @@ class Api2Spec extends SparkSuite {
   }
 
   test("cross-session persisted cache: open -> warm -> exit -> reopen -> hit without recompute") {
-    val cdir = Files.createTempDirectory("graftcache").toString + "/spill"
-    val db1 = Database.open(spark, sfDir, cacheDir = cdir)
-    val c1 = db1("orders").col("o_totalprice")
-    val (n, s, m) = (c1.count, c1.sum, c1.median)
-    val warm = db1.cache.size
-    assert(warm >= 3)
-    db1.exit() // spills the memo to cdir
-    // fresh Database + fresh QueryCache over the same cacheDir: the spill
-    // reloads in full (caps unchanged, so nothing is dropped)
-    val db2 = Database.open(spark, sfDir, cacheDir = cdir)
-    assert(db2.cache.size == warm)
-    // the same aggregates re-derive the SAME canonical plan keys: pure
-    // hits — if any key failed to match, the recompute would insert a new
-    // entry and grow the cache
-    val c2 = db2("orders").col("o_totalprice")
-    assert(c2.count == n && c2.sum == s && c2.median == m)
-    assert(db2.cache.size == warm, "reopened cache answered without recompute")
-    // caps survive the round-trip: a tiny-cap reopen loads nothing big
-    val db3 = Database.open(spark, sfDir, maxItemMb = 1e-9, cacheDir = cdir)
-    assert(db3.cache.size == 0)
-    // and a session whose cache is EMPTY must not clobber the warm spill
-    // on exit — the durable cache survives cache-off/tight-cap sessions
-    db3.exit()
-    val db4 = Database.open(spark, sfDir, cacheDir = cdir)
-    assert(db4.cache.size == warm, "empty-cache exit preserved the spill")
-    db4.exit()
-    db2.exit()
+    withTempDir("graftcache") { tmp =>
+      val cdir = tmp + "/spill"
+      val db1 = Database.open(spark, sfDir, cacheDir = cdir)
+      val c1 = db1("orders").col("o_totalprice")
+      val (n, s, m) = (c1.count, c1.sum, c1.median)
+      val warm = db1.cache.size
+      assert(warm >= 3)
+      db1.exit() // spills the memo to cdir
+      // fresh Database + fresh QueryCache over the same cacheDir: the spill
+      // reloads in full (caps unchanged, so nothing is dropped)
+      val db2 = Database.open(spark, sfDir, cacheDir = cdir)
+      assert(db2.cache.size == warm)
+      // the same aggregates re-derive the SAME canonical plan keys: pure
+      // hits — if any key failed to match, the recompute would insert a new
+      // entry and grow the cache
+      val c2 = db2("orders").col("o_totalprice")
+      assert(c2.count == n && c2.sum == s && c2.median == m)
+      assert(db2.cache.size == warm, "reopened cache answered without recompute")
+      // caps survive the round-trip: a tiny-cap reopen loads nothing big
+      val db3 = Database.open(spark, sfDir, maxItemMb = 1e-9, cacheDir = cdir)
+      assert(db3.cache.size == 0)
+      // and a session whose cache is EMPTY must not clobber the warm spill
+      // on exit — the durable cache survives cache-off/tight-cap sessions
+      db3.exit()
+      val db4 = Database.open(spark, sfDir, cacheDir = cdir)
+      assert(db4.cache.size == warm, "empty-cache exit preserved the spill")
+      db4.exit()
+      db2.exit()
+    }
   }
 
   test("binary sqlite: a corrupt .db fails loudly, never a silent stub") {
-    // without a sqlite-jdbc jar the .db path runs graft's pure-JVM reader
-    // (SqliteFileSpec covers real files); garbage bytes must raise the
-    // reference's FileTypeError, not return empty tables
-    assert(!graft.sources.SqliteJdbc.driverAvailable)
-    val f = Files.createTempDirectory("graftdb").resolve("forestation.db")
-    Files.write(f, Array[Byte](1, 2, 3))
-    val e = intercept[FileTypeError] { Database.open(spark, f.toString) }
-    assert(e.getMessage.contains("truncated") || e.getMessage.contains("magic"))
+    // the .db path runs graft's pure-JVM reader (SqliteFileSpec covers
+    // real files); garbage bytes must raise the reference's FileTypeError,
+    // not return empty tables
+    withTempDir("graftdb") { tmp =>
+      val f = java.nio.file.Paths.get(tmp, "forestation.db")
+      Files.write(f, Array[Byte](1, 2, 3))
+      val e = intercept[FileTypeError] { Database.open(spark, f.toString) }
+      assert(e.getMessage.contains("truncated") || e.getMessage.contains("magic"))
+    }
   }
 
   test("stale spill is discarded: fingerprint mismatch loads 0 entries") {
     import spark.implicits._
-    val cdir = Files.createTempDirectory("graftstale").toString + "/spill"
-    val qc = new QueryCache()
-    qc.getOrElseUpdate("some plan key")(42L)
-    qc.saveTo(spark, cdir, Some("fp-when-written"))
-    // same fingerprint → loads; changed sources (different fp) → discarded
-    val fresh1 = new QueryCache()
-    assert(fresh1.loadFrom(spark, cdir, Some("fp-when-written")) == 1)
-    val fresh2 = new QueryCache()
-    assert(fresh2.loadFrom(spark, cdir, Some("fp-after-data-changed")) == 0)
-    assert(fresh2.size == 0)
-    // an UNSTAMPED spill is stale-by-default when a fingerprint is expected
-    Seq(("k", Array[Byte](1, 2, 3))).toDF("key", "value")
-      .write.mode("overwrite").parquet(cdir)
-    val fresh3 = new QueryCache()
-    assert(fresh3.loadFrom(spark, cdir, Some("any")) == 0)
+    withTempDir("graftstale") { tmp =>
+      val cdir = tmp + "/spill"
+      val qc = new QueryCache()
+      qc.getOrElseUpdate("some plan key")(42L)
+      qc.saveTo(spark, cdir, Some("fp-when-written"))
+      // same fingerprint → loads; changed sources (different fp) → discarded
+      val fresh1 = new QueryCache()
+      assert(fresh1.loadFrom(spark, cdir, Some("fp-when-written")) == 1)
+      val fresh2 = new QueryCache()
+      assert(fresh2.loadFrom(spark, cdir, Some("fp-after-data-changed")) == 0)
+      assert(fresh2.size == 0)
+      // an UNSTAMPED spill is stale-by-default when a fingerprint is expected
+      Seq(("k", Array[Byte](1, 2, 3))).toDF("key", "value")
+        .write.mode("overwrite").parquet(cdir)
+      val fresh3 = new QueryCache()
+      assert(fresh3.loadFrom(spark, cdir, Some("any")) == 0)
+    }
   }
 
   test("hostile spill: corrupt bytes and disallowed classes load 0 entries without throwing") {
     import spark.implicits._
-    val cdir = Files.createTempDirectory("grafthostile").toString + "/spill"
-    // entry 1: garbage bytes (not a serialization stream)
-    val garbage = ("k1", Array.fill[Byte](64)(0x7f))
-    // entry 2: a well-formed stream of a class OUTSIDE the allow-list —
-    // stands in for a deserialization-gadget payload; the ObjectInputFilter
-    // must reject it before readObject resolves it
-    val bos = new java.io.ByteArrayOutputStream()
-    val oos = new java.io.ObjectOutputStream(bos)
-    oos.writeObject(new java.io.File("/etc/passwd"))
-    oos.close()
-    val gadget = ("k2", bos.toByteArray)
-    // entry 3: a legitimate boxed scalar — must still load
-    val bos2 = new java.io.ByteArrayOutputStream()
-    val oos2 = new java.io.ObjectOutputStream(bos2)
-    oos2.writeObject(java.lang.Long.valueOf(7L))
-    oos2.close()
-    val ok = ("k3", bos2.toByteArray)
-    Seq(garbage, gadget, ok).toDF("key", "value").write.mode("overwrite").parquet(cdir)
-    val qc = new QueryCache()
-    assert(qc.loadFrom(spark, cdir) == 1, "only the allow-listed scalar loads")
-    assert(!qc.contains("k1") && !qc.contains("k2") && qc.contains("k3"))
-    assert(qc.getOrElseUpdate[Any]("k3")(fail("must be a hit")) == 7L)
+    withTempDir("grafthostile") { tmp =>
+      val cdir = tmp + "/spill"
+      // entry 1: garbage bytes (not a serialization stream)
+      val garbage = ("k1", Array.fill[Byte](64)(0x7f))
+      // entry 2: a well-formed stream of a class OUTSIDE the allow-list —
+      // stands in for a deserialization-gadget payload; the ObjectInputFilter
+      // must reject it before readObject resolves it
+      val bos = new java.io.ByteArrayOutputStream()
+      val oos = new java.io.ObjectOutputStream(bos)
+      oos.writeObject(new java.io.File("/etc/passwd"))
+      oos.close()
+      val gadget = ("k2", bos.toByteArray)
+      // entry 3: a legitimate boxed scalar — must still load
+      val bos2 = new java.io.ByteArrayOutputStream()
+      val oos2 = new java.io.ObjectOutputStream(bos2)
+      oos2.writeObject(java.lang.Long.valueOf(7L))
+      oos2.close()
+      val ok = ("k3", bos2.toByteArray)
+      Seq(garbage, gadget, ok).toDF("key", "value").write.mode("overwrite").parquet(cdir)
+      val qc = new QueryCache()
+      assert(qc.loadFrom(spark, cdir) == 1, "only the allow-listed scalar loads")
+      assert(!qc.contains("k1") && !qc.contains("k2") && qc.contains("k3"))
+      assert(qc.getOrElseUpdate[Any]("k3")(fail("must be a hit")) == 7L)
+    }
+  }
+
+  test("cache keys name their source: same-schema tables never share a stat") {
+    withTempDir("graftkeys") { dir =>
+      import spark.implicits._
+      Seq(1L, 2L, 3L).toDF("v").write.parquet(s"$dir/a.parquet")
+      Seq(10L, 20L).toDF("v").write.parquet(s"$dir/b.parquet")
+      val kdb = Database.open(spark, dir)
+      assert(kdb("a")("v").sum == 6.0)
+      assert(kdb("b")("v").sum == 30.0, "b's sum must not be a's cached sum")
+      assert(kdb.cache.keyOf(kdb("a").toDf) != kdb.cache.keyOf(kdb("b").toDf))
+      // local relations key on their rows
+      val (x, y) = (Seq(1L).toDF("v"), Seq(2L).toDF("v"))
+      assert(kdb.cache.keyOf(x) != kdb.cache.keyOf(y))
+      assert(kdb.cache.keyOf(x) == kdb.cache.keyOf(Seq(1L).toDF("v")))
+      kdb.exit()
+      // a .sql dump's tables are RDD-backed: two with the same column
+      // types must not share a stat either
+      val sdb = Database.open(spark, getClass.getResource("/forestation_subset.sql").getPath)
+      val (fa, la) = (sdb("forest_area"), sdb("land_area"))
+      for ((t, c) <- Seq(fa -> "forest_area_sqkm", la -> "total_area_sq_mi"))
+        assert(t(c).sum == t.toDf.agg(Aggs.sumAgg(fcol(c))).head.getDouble(0), c)
+      sdb.exit()
+    }
   }
 
   test("LRU eviction: filling past maxTotalMb evicts oldest, hot keys survive") {

@@ -32,40 +32,31 @@ class SqliteFileSpec extends SparkSuite {
     }
   }
 
-  test("size guard: an oversized .db refuses open with the ingest recipe") {
-    val path = res("forestation_subset.db")
-    val e = intercept[graft.api.FileTypeError] {
-      SqliteFile.open(spark, path, maxOpenBytes = 1024L)
-    }
-    assert(e.getMessage.contains("ingest") &&
-      e.getMessage.contains("maxOpenBytes"))
-    // at the default guard the same file opens fine
-    assert(SqliteFile.open(spark, path).nonEmpty)
-  }
-
   test("ingest streams to parquet in bounded batches, identical to open") {
     val path = res("forestation_subset.db")
     val outDir = java.nio.file.Files
       .createTempDirectory("sqlite_ingest_").toString
-    // batchRows=7 forces every table through MANY append batches — the
-    // bounded-driver-memory path — and the parquet round trip must match
-    // the local-relation open row for row
-    val ingested = SqliteFile.ingest(spark, path, outDir, batchRows = 7)
-    val opened = SqliteFile.open(spark, path)
-    assert(ingested.keySet === opened.keySet)
-    for (t <- opened.keySet) {
-      assert(ingested(t).schema === opened(t).schema, s"schema mismatch in $t")
-      assert(ingested(t).count() === opened(t).count(), s"count mismatch in $t")
-      assert(ingested(t).exceptAll(opened(t)).isEmpty &&
-        opened(t).exceptAll(ingested(t)).isEmpty, s"row set mismatch in $t")
-      // really parquet-backed, not a local relation
-      assert(new java.io.File(s"$outDir/$t").listFiles()
-        .exists(_.getName.endsWith(".parquet")), s"$t not parquet-backed")
-    }
-    // re-ingest replaces cleanly (no doubled rows from stale appends)
-    val again = SqliteFile.ingest(spark, path, outDir, batchRows = 1000)
-    for (t <- opened.keySet)
-      assert(again(t).count() === opened(t).count(), s"re-ingest doubled $t")
+    try {
+      // batchRows=7 forces every table through MANY append batches — the
+      // bounded-driver-memory path — and the parquet round trip must match
+      // the scan-backed open row for row
+      val ingested = SqliteFile.ingest(spark, path, outDir, batchRows = 7)
+      val opened = SqliteFile.open(spark, path)
+      assert(ingested.keySet === opened.keySet)
+      for (t <- opened.keySet) {
+        assert(ingested(t).schema === opened(t).schema, s"schema mismatch in $t")
+        assert(ingested(t).count() === opened(t).count(), s"count mismatch in $t")
+        assert(ingested(t).exceptAll(opened(t)).isEmpty &&
+          opened(t).exceptAll(ingested(t)).isEmpty, s"row set mismatch in $t")
+        // really parquet-backed
+        assert(new java.io.File(s"$outDir/$t").listFiles()
+          .exists(_.getName.endsWith(".parquet")), s"$t not parquet-backed")
+      }
+      // re-ingest replaces cleanly (no doubled rows from stale appends)
+      val again = SqliteFile.ingest(spark, path, outDir, batchRows = 1000)
+      for (t <- opened.keySet)
+        assert(again(t).count() === opened(t).count(), s"re-ingest doubled $t")
+    } finally graft.ops.Layout.deleteRecursively(new java.io.File(outDir))
   }
 
   test("record decode: every integer width, floats, text, blobs, NULLs, IPK rowids") {
@@ -157,8 +148,6 @@ class SqliteFileSpec extends SparkSuite {
   }
 
   test("Database.open end-to-end on a .db file without any JDBC driver") {
-    assume(!SqliteJdbc.driverAvailable, "a sqlite-jdbc jar appeared; this " +
-      "test pins the pure-JVM fallback path")
     val db = Database.open(spark, res("forestation_subset.db"))
     assert(db.tables === Seq("forest_area", "land_area", "regions"))
     val aruba = db.query(
@@ -225,6 +214,7 @@ class SqliteFileSpec extends SparkSuite {
       SqliteFile.open(spark, res("sqlite_hot_journal.db"))
     }
     assert(e.getMessage.contains("journal"))
+    intercept[FileTypeError](Database.open(spark, res("sqlite_hot_journal.db")))
     val cold = SqliteFile.open(spark, res("sqlite_cold_journal.db"))
     assert(cold("t").collect().map(_.getLong(0)).toSeq === Seq(1L))
   }
@@ -370,5 +360,13 @@ class SqliteFileSpec extends SparkSuite {
       SqliteFile.open(spark, res("sqlite_virtual.db"))
     }
     assert(e4.getMessage.contains(".dump"))
+    // each fails at Database.open, before any query runs
+    intercept[FileTypeError](Database.open(spark, res("sqlite_virtual.db")))
+    val notDb = java.nio.file.Files.createTempFile("not_sqlite_", ".db")
+    try {
+      java.nio.file.Files.write(notDb, ("-- a SQL script, not a database\n" * 8).getBytes)
+      val e5 = intercept[FileTypeError](Database.open(spark, notDb.toString))
+      assert(e5.getMessage.contains("magic"))
+    } finally java.nio.file.Files.delete(notDb)
   }
 }

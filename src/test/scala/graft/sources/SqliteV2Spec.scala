@@ -1,13 +1,18 @@
 package graft.sources
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSuite
+import graft.api.Database
 
 /** The `graft-sqlite` DSv2 connector: executor-side streaming decode of
-  * one table, equal row-for-row to the driver-side SqliteFile.open path
-  * (two independent consumers of the same b-tree walker), column pruning
-  * visible in the scan, fail-loud option/table errors.
+  * one table, split across tasks by b-tree subtree and equal row-for-row
+  * to a whole-tree walk of the same decoder, column pruning visible in the
+  * scan, fail-loud option/table errors, and the plan shape and statistics
+  * `Database.open` sessions get from it.
   */
 class SqliteV2Spec extends SparkSuite {
 
@@ -17,8 +22,84 @@ class SqliteV2Spec extends SparkSuite {
     r.getPath
   }
 
-  private def v2(table: String) = spark.read.format("graft-sqlite")
-    .option("table", table).load(res("forestation_subset.db"))
+  private def v2(table: String, file: String = "forestation_subset.db") =
+    spark.read.format("graft-sqlite").option("table", table).load(res(file))
+
+  /** The table's rows as one task would read them: the whole b-tree, walked
+    * on the driver in key order.
+    */
+  private def wholeTree(file: String, table: String): Seq[org.apache.spark.sql.Row] = {
+    val (_, rows, close) = SqliteFile.streamTable(res(file), table)
+    try rows.toVector finally close()
+  }
+
+  test("split scan: a multi-level rowid table reads in several tasks, in rowid order") {
+    // `many`: 5000 rows on 512-byte pages under an interior root
+    val many = v2("many", "sqlite_edge_cases.db")
+    assert(many.rdd.getNumPartitions > 1)
+    val rows = many.collect().toSeq
+    assert(rows.map(_.getLong(0)) === (1L to 5000L))
+    assert(rows === wholeTree("sqlite_edge_cases.db", "many"))
+    // positional access through the API follows the same order
+    val db = Database.open(spark, res("sqlite_edge_cases.db"))
+    for (i <- Seq(0, 2500, 4999))
+      assert(db("many").iloc(i.toLong) === rows(i), s"iloc($i)")
+    db.exit()
+  }
+
+  test("split scan: a WITHOUT ROWID table stays one task and keeps its answers") {
+    val wr = v2("wr_many", "sqlite_without_rowid.db")
+    assert(wr.rdd.getNumPartitions === 1)
+    val rows = wr.collect().toSeq
+    assert(rows.length === 3000)
+    assert(rows === wholeTree("sqlite_without_rowid.db", "wr_many"))
+  }
+
+  test("a .db table's analyzed plan holds no LocalRelation") {
+    val db = Database.open(spark, res("sqlite_edge_cases.db"))
+    for (t <- db.tables) {
+      val plan = db(t).toDf.queryExecution.analyzed
+      assert(plan.collect { case l: LocalRelation => l }.isEmpty, s"$t:\n$plan")
+      assert(plan.collect { case r: DataSourceV2Relation => r }.nonEmpty, s"$t:\n$plan")
+    }
+    db.exit()
+  }
+
+  test("a repeated col.sum on a .db table runs zero Spark jobs") {
+    val db = Database.open(spark, res("sqlite_edge_cases.db"))
+    val sq = db("many")("sq")
+    val first = sq.sum
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty(
+            "spark.job.description") == "zero-jobs sentinel")) sentinel.countDown()
+        else { jobs.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(sq.sum === first)
+      // the listener bus delivers in order: once the sentinel job's start
+      // arrives, any job the repeat started has been counted
+      spark.sparkContext.setJobDescription("zero-jobs sentinel")
+      spark.range(1).count()
+      spark.sparkContext.setJobDescription(null)
+      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.get === 0)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    db.exit()
+  }
+
+  test("the scan reports its page bytes: a join of two small .db tables broadcasts") {
+    val db = Database.open(spark, res("forestation_subset.db"))
+    val j = db.query("SELECT f.year, r.region FROM forest_area f " +
+      "JOIN regions r ON f.country_code = r.country_code")
+    val plan = j.queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastHashJoin"), plan)
+    assert(j.count() > 0)
+    db.exit()
+  }
 
   test("every table reads identically through the connector and through open()") {
     val opened = SqliteFile.open(spark, res("forestation_subset.db"))
@@ -112,7 +193,7 @@ class SqliteV2Spec extends SparkSuite {
       .collect().map(_.getString(1)).sorted.toSeq
     assert(tabs == opened.keys.toSeq.sorted)
     // pure SQL against the catalog-qualified name — no DataFrame API, no
-    // temp view — returns the same rows the driver-side open() decodes
+    // temp view — returns the same rows open() serves
     val viaSql = spark.sql("SELECT * FROM forestdb.main.forest_area")
     assert(viaSql.schema === opened("forest_area").schema)
     assert(viaSql.exceptAll(opened("forest_area")).isEmpty &&
