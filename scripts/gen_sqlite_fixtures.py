@@ -339,6 +339,21 @@ def gen_unsupported():
     print(f"wrote {p4} ({os.path.getsize(p4)} bytes)")
 
 
+def gen_empty_table():
+    # a table with no rows next to one with a row: SqliteFileSpec checks
+    # that ingest still lands the empty table, with its schema
+    path = os.path.join(RES, "sqlite_empty_table.db")
+    if os.path.exists(path):
+        os.remove(path)
+    con = sqlite3.connect(path)
+    con.execute("CREATE TABLE empty (id INTEGER PRIMARY KEY, v TEXT, x REAL)")
+    con.execute("CREATE TABLE one (a INTEGER)")
+    con.execute("INSERT INTO one VALUES (1)")
+    con.commit()
+    con.close()
+    print(f"wrote {path} ({os.path.getsize(path)} bytes)")
+
+
 if __name__ == "__main__":
     gen_forestation()
     gen_edge_cases()
@@ -347,3 +362,4 @@ if __name__ == "__main__":
     gen_utf16()
     gen_views()
     gen_unsupported()
+    gen_empty_table()

@@ -294,14 +294,21 @@ object Database {
     val target = new File(dir)
     // single-file open, like the reference's Database('file.db')
     // (connection.py:64-78: unsupported extensions raise FileTypeError)
-    if (target.isFile) {
-      // .sql dumps are the reference's native input (connection.py:64-78,
-      // utils.py:242-265) — replayed here by graft.sources.SqlDump instead
-      // of SQLite. Binary .db files open through graft's own pure-JVM
-      // reader, one lazy `graft-sqlite` scan per table
-      // (graft.sources.SqliteFile.open).
-      val isDump = dir.endsWith(".sql")
-      if (isDump || Seq(".db", ".sqlite", ".sqlite3").exists(dir.endsWith)) {
+    val isDump = dir.endsWith(".sql")
+    val isSqlite = target.isFile &&
+      (isDump || Seq(".db", ".sqlite", ".sqlite3").exists(dir.endsWith))
+    if (target.isFile && !isSqlite &&
+        !dir.endsWith(".parquet") && !dir.endsWith(".csv"))
+      throw new FileTypeError(
+        s"unsupported file type '$dir' — expected .parquet, .csv, .sql, " +
+          ".db, .sqlite or .sqlite3")
+    val (tableMap, sources, fileViews) =
+      if (isSqlite) {
+        // .sql dumps are the reference's native input (connection.py:64-78,
+        // utils.py:242-265) — replayed here by graft.sources.SqlDump instead
+        // of SQLite. Binary .db files open through graft's own pure-JVM
+        // reader, one lazy `graft-sqlite` scan per table
+        // (graft.sources.SqliteFile.open).
         val tableMap =
           if (isDump) graft.sources.SqlDump.open(spark, dir)
           else graft.sources.SqliteFile.open(spark, dir)
@@ -309,48 +316,41 @@ object Database {
         val fileViews = registerFileViews(spark, tableMap.keySet,
           if (isDump) graft.sources.SqlDump.viewDefs(spark, dir)
           else graft.sources.SqliteFile.views(dir))
-        val qc = new QueryCache(cacheEnabled, maxItemMb, maxTotalMb)
-        val fp = sourceFingerprint(Seq(target))
-        if (cacheDir != null) qc.loadFrom(spark, cacheDir, Some(fp))
-        val db = new Database(spark, tableMap, qc, dir, Option(cacheDir), fp)
-        db.adoptFileViews(fileViews)
-        return db
+        (tableMap, Seq(target), fileViews)
+      } else {
+        val files =
+          if (target.isFile) Array(target)
+          else Option(target.listFiles()).getOrElse(Array.empty[File])
+            .filter(f => f.isFile || f.isDirectory) // spark parquet "files" may be dirs
+            .filter(f => f.getName.endsWith(".parquet") || f.getName.endsWith(".csv") ||
+              isPartitionedStore(f)) // graft.ops.Layout stores: dirs of key=value/ subdirs
+        if (files.isEmpty)
+          throw new FileTypeError(s"no .parquet or .csv tables found under '$dir'")
+        val tableMap = files.map { f =>
+          val isCsv = f.getName.endsWith(".csv")
+          val stem = f.getName.replaceAll("\\.(parquet|csv)$", "")
+          // CSV ingestion normalizes names like the reference's
+          // convert_csvs_to_db (utils.py:233-238): spaces/hyphens -> '_' in the
+          // table name and headers, headers lowercased
+          val tname = if (isCsv) stem.replace(' ', '_').replace('-', '_') else stem
+          val raw =
+            if (isCsv) spark.read.option("header", "true").option("inferSchema", "true").csv(f.getPath)
+            else spark.read.parquet(f.getPath)
+          val df =
+            if (isCsv)
+              raw.toDF(raw.columns.toIndexedSeq
+                .map(_.replace(' ', '_').replace('-', '_').toLowerCase): _*)
+            else raw
+          df.createOrReplaceTempView(tname)
+          tname -> df
+        }.toMap
+        (tableMap, files.toIndexedSeq, Nil)
       }
-      if (!dir.endsWith(".parquet") && !dir.endsWith(".csv"))
-        throw new FileTypeError(
-          s"unsupported file type '$dir' — expected .parquet, .csv, .sql, " +
-            ".db, .sqlite or .sqlite3")
-    }
-    val files =
-      if (target.isFile) Array(target)
-      else Option(target.listFiles()).getOrElse(Array.empty[File])
-        .filter(f => f.isFile || f.isDirectory) // spark parquet "files" may be dirs
-        .filter(f => f.getName.endsWith(".parquet") || f.getName.endsWith(".csv") ||
-          isPartitionedStore(f)) // graft.ops.Layout stores: dirs of key=value/ subdirs
-    if (files.isEmpty)
-      throw new FileTypeError(s"no .parquet or .csv tables found under '$dir'")
-    val tableMap = files.map { f =>
-      val isCsv = f.getName.endsWith(".csv")
-      val stem = f.getName.replaceAll("\\.(parquet|csv)$", "")
-      // CSV ingestion normalizes names like the reference's
-      // convert_csvs_to_db (utils.py:233-238): spaces/hyphens -> '_' in the
-      // table name and headers, headers lowercased
-      val tname = if (isCsv) stem.replace(' ', '_').replace('-', '_') else stem
-      val raw =
-        if (isCsv) spark.read.option("header", "true").option("inferSchema", "true").csv(f.getPath)
-        else spark.read.parquet(f.getPath)
-      val df =
-        if (isCsv)
-          raw.toDF(raw.columns.toIndexedSeq
-            .map(_.replace(' ', '_').replace('-', '_').toLowerCase): _*)
-        else raw
-      df.createOrReplaceTempView(tname)
-      tname -> df
-    }.toMap
     val qc = new QueryCache(cacheEnabled, maxItemMb, maxTotalMb)
-    val fp = sourceFingerprint(files.toIndexedSeq)
+    val fp = sourceFingerprint(sources)
     if (cacheDir != null) qc.loadFrom(spark, cacheDir, Some(fp))
     val db = new Database(spark, tableMap, qc, dir, Option(cacheDir), fp)
+    db.adoptFileViews(fileViews)
     if (populateCache) db.populateCache()
     db
   }

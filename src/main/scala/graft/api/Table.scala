@@ -333,23 +333,6 @@ final class Table private[api] (
 
   def head(n: Int = 5): Seq[Row] = this.limit(n).toDf.collect().toSeq
 
-  /** First/last `n` rows rendered compactly — the reference's repr fetches
-    * only head+tail via iloc instead of a full scan (table.py:445-468).
-    */
-  def reprString(n: Int = 10): String = {
-    val total = len
-    val half = n / 2
-    val head = this.limit(half).toDf.collect()
-    val tail: Seq[Row] =
-      if (total <= n) Seq.empty
-      else iloc(total - half, total)
-    val shown: Seq[Seq[Any]] = head.map(_.toSeq).toSeq ++
-      (if (tail.isEmpty) Nil else Seq(Seq("..."))) ++ tail.map(_.toSeq)
-    val header = columns.mkString(" | ")
-    s"$header\n" + shown.map(_.mkString(" | ")).mkString("\n") +
-      s"\n[$total rows x ${columns.length} cols]"
-  }
-
   def iterator: Iterator[Row] = {
     val it = df.toLocalIterator()
     new Iterator[Row] { def hasNext = it.hasNext; def next() = it.next() }

@@ -64,7 +64,8 @@ object Export {
     * rebalancing pass a shard store needs when upstream batches left it
     * fragmented into many small archives (WebDataset-style training reads
     * want few large sequential shards, not thousands of KB-sized ones) —
-    * compose with [[graft.sources.Tar.writeShards]] on the result.
+    * write the result with `graft-tar`, naming each shard file from the
+    * added `shard` column.
     *
     * Every shard except the last lands in (targetBytes − maxRow,
     * targetBytes + maxRow): the greedy order-preserving packing, exactly

@@ -621,7 +621,7 @@ object SinkOps {
         |FROM documents WHERE doc_id % 3 <= 1
         |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    // -- WebDataset tar-shard round trip (sources/Tar): the corpus is
+    // -- WebDataset tar-shard round trip (graft-tar): the corpus is
     //    packed into 8 USTAR shards (one task per shard, name-sorted
     //    deterministic bytes), read BACK through the checksum-verifying
     //    parser, and aggregated. Oracle reads the original table —
@@ -632,12 +632,14 @@ object SinkOps {
       (s: SparkSession, d: String) => {
         val dir = storeDir("tarshards", d)
         deleteRecursively(new java.io.File(dir))
-        val df = t(s, d, "documents")
-          .select(pmod(col("doc_id"), lit(8)).as("shard"),
+        t(s, d, "documents")
+          .select(concat(lit("shard-"), pmod(col("doc_id"), lit(8)),
+              lit(".tar")).as("shard_file"),
             concat(col("doc_id").cast("string"), lit(".txt")).as("name"),
+            lit(null).cast("long").as("size"),
             encode(col("text"), "UTF-8").as("payload"))
-        graft.sources.Tar.writeShards(df, dir, "shard", "name", "payload")
-        graft.sources.Tar.readShards(s, dir)
+          .write.format("graft-tar").mode("overwrite").save(dir)
+        s.read.format("graft-tar").load(dir)
           .select(
             regexp_extract(col("name"), "^(\\d+)\\.txt$", 1).cast("long").as("doc_id"),
             decode(col("payload"), "UTF-8").as("text"),
@@ -659,7 +661,7 @@ object SinkOps {
     //    (the residue of incremental ingest batches) is repacked into
     //    ~16 KiB sequential shards — read back, size-packed in doc_id
     //    order by Export.reshardBySize's two-phase prefix sum (one range
-    //    exchange, no global window), rewritten with Tar.writeShards'
+    //    exchange, no global window), rewritten with graft-tar's
     //    atomic commit. The gate reads the REPACKED store and checks the
     //    full per-shard layout (membership boundaries, byte sizes, id
     //    ranges) against DuckDB replaying the same greedy packing — so a
@@ -672,22 +674,23 @@ object SinkOps {
         val packed = storeDir("tarpacked", d)
         deleteRecursively(new java.io.File(small))
         deleteRecursively(new java.io.File(packed))
-        val docs = t(s, d, "documents")
+        def writeTar(df: DataFrame, dir: String): Unit =
+          df.select(concat(lit("shard-"), col("shard"), lit(".tar")).as("shard_file"),
+              col("name"), lit(null).cast("long").as("size"), col("payload"))
+            .write.format("graft-tar").mode("overwrite").save(dir)
+        writeTar(t(s, d, "documents")
           .select(pmod(col("doc_id"), lit(32)).as("shard"),
             concat(col("doc_id").cast("string"), lit(".txt")).as("name"),
-            encode(col("text"), "UTF-8").as("payload"))
-        graft.sources.Tar.writeShards(docs, small, "shard", "name", "payload")
-        val members = graft.sources.Tar.readShards(s, small)
+            encode(col("text"), "UTF-8").as("payload")), small)
+        val members = s.read.format("graft-tar").load(small)
           .select(
             regexp_extract(col("name"), "^(\\d+)\\.txt$", 1)
               .cast("long").as("doc_id"),
             col("name"), col("payload"),
             length(col("payload")).cast("long").as("sz"))
-        val packedDf = graft.ops.Export.reshardBySize(
-          members, Seq(col("doc_id").asc), "sz", targetBytes = 16384L)
-        graft.sources.Tar.writeShards(packedDf, packed, "shard", "name",
-          "payload")
-        graft.sources.Tar.readShards(s, packed)
+        writeTar(graft.ops.Export.reshardBySize(
+          members, Seq(col("doc_id").asc), "sz", targetBytes = 16384L), packed)
+        s.read.format("graft-tar").load(packed)
           .select(
             regexp_extract(col("shard_file"), "^shard-(\\d+)\\.tar$", 1)
               .cast("long").as("shard"),

@@ -31,9 +31,9 @@ import graft.api.FileTypeError
   * [[open]] decodes nothing on the driver: each table is a `graft-sqlite`
   * DataSourceV2 read ([[graft.sources.sqlitev2.SqliteDataSource]]) whose
   * scan tasks walk disjoint subtrees of the table's b-tree executor-side,
-  * so driver memory does not grow with the file. [[ingest]] streams each
-  * table to parquet in bounded row batches for files that are queried
-  * often enough to want a columnar copy. Schema mapping reuses
+  * so driver memory does not grow with the file. [[ingest]] writes those
+  * same reads to parquet, for files that are queried often enough to
+  * want a columnar copy. Schema mapping reuses
   * [[SqlDump.parseDdl]] on the CREATE statements stored in `sqlite_master`,
   * so a `.db` and its `.dump` twin open with IDENTICAL schemas
   * (hash-compared in SqliteFileSpec) — except BLOB columns, which the
@@ -63,14 +63,14 @@ object SqliteFile {
       roots: Option[Seq[Int]] = None)
       : (org.apache.spark.sql.types.StructType, Iterator[Row], () => Unit) = {
     val db = new Reader(path)
-    val found = try {
-      tableIterators(db, path, only = Some(table), roots).headOption.getOrElse(
+    val (schema, rows) = try {
+      tableIterator(db, path, table, roots).getOrElse(
         // name listing only — never validates (or decodes) other tables
         throw new FileTypeError(
           s"table '$table' not found in '$path' — available: " +
             db.masterTables().map(_._1).sorted.mkString(", ")))
     } catch { case e: Throwable => db.close(); throw e }
-    (found._2, found._3, () => db.close())
+    (schema, rows, () => db.close())
   }
 
   /** Schema of one table, decoded from the file's DDL (no rows read). */
@@ -112,18 +112,17 @@ object SqliteFile {
     } finally db.close()
   }
 
-  /** Ingest-once made real: decode each table STREAMING — `batchRows`
-    * rows on the driver at a time, each batch appended to
-    * `outDir/<table>/` as parquet — and return parquet-backed
-    * DataFrames: driver memory is bounded by one batch regardless of
-    * file size. Any prior ingest of the same table dir is replaced.
+  /** Ingest-once: write each table's [[open]] read to `outDir/<table>/`
+    * as parquet and return parquet-backed DataFrames. The rows are decoded
+    * by the `graft-sqlite` scan tasks and written by them, so nothing
+    * passes through the driver; an empty table still lands with its
+    * schema. Any prior ingest of the same table dir is replaced.
     */
-  def ingest(spark: SparkSession, path: String, outDir: String,
-      batchRows: Int = 500000): Map[String, DataFrame] = {
-    require(batchRows > 0, s"batchRows must be positive, got $batchRows")
-    // Crash safety (the graft.ops.Layout convention): batches land in a
-    // dot-prefixed scratch dir — invisible to Spark's file index — and
-    // the finished table swaps in with rename-aside ATOMIC_MOVEs, so a
+  def ingest(spark: SparkSession, path: String,
+      outDir: String): Map[String, DataFrame] = {
+    // Crash safety (the graft.ops.Layout convention): the table is written
+    // into a dot-prefixed scratch dir — invisible to Spark's file index —
+    // and the finished table swaps in with rename-aside ATOMIC_MOVEs, so a
     // kill mid-ingest can never leave a partial table readable as
     // complete. The pre-existing table survives every crash window
     // except the instant between its aside-move and the scratch move-in
@@ -131,59 +130,43 @@ object SqliteFile {
     // copy). Stale scratch/aside dirs from a crashed run are cleaned on
     // the next ingest.
     import java.nio.file.{Files, StandardCopyOption}
-    val db = new Reader(path)
-    try {
-      import scala.jdk.CollectionConverters._
-      val base = outDir.stripSuffix("/")
-      tableIterators(db, path).map { case (name, schema, rowIt) =>
-        val finalDir = new java.io.File(s"$base/$name")
-        val scratch = new java.io.File(s"$base/.__ingesting__$name")
-        val aside = new java.io.File(s"$base/.__old__$name")
-        graft.ops.Layout.deleteRecursively(scratch)
-        graft.ops.Layout.deleteRecursively(aside)
-        var wrote = false
-        rowIt.grouped(batchRows).foreach { chunk =>
-          spark.createDataFrame(chunk.asJava, schema)
-            .write.mode("append").parquet(scratch.getAbsolutePath)
-          wrote = true
-        }
-        if (!wrote) // empty table still lands with its schema
-          spark.createDataFrame(
-            java.util.Collections.emptyList[Row](), schema)
-            .write.mode("overwrite").parquet(scratch.getAbsolutePath)
-        if (finalDir.exists()) {
-          Files.move(finalDir.toPath, aside.toPath,
-            StandardCopyOption.ATOMIC_MOVE)
-          try Files.move(scratch.toPath, finalDir.toPath,
-            StandardCopyOption.ATOMIC_MOVE)
-          catch {
-            case e: Throwable =>
-              Files.move(aside.toPath, finalDir.toPath,
-                StandardCopyOption.ATOMIC_MOVE)
-              throw e
-          }
-          graft.ops.Layout.deleteRecursively(aside)
-        } else Files.move(scratch.toPath, finalDir.toPath,
+    val base = outDir.stripSuffix("/")
+    open(spark, path).map { case (name, df) =>
+      val finalDir = new java.io.File(s"$base/$name")
+      val scratch = new java.io.File(s"$base/.__ingesting__$name")
+      val aside = new java.io.File(s"$base/.__old__$name")
+      graft.ops.Layout.deleteRecursively(scratch)
+      graft.ops.Layout.deleteRecursively(aside)
+      df.write.parquet(scratch.getAbsolutePath)
+      if (finalDir.exists()) {
+        Files.move(finalDir.toPath, aside.toPath,
           StandardCopyOption.ATOMIC_MOVE)
-        name -> spark.read.parquet(finalDir.getAbsolutePath)
-      }.toMap
-    } finally db.close()
+        try Files.move(scratch.toPath, finalDir.toPath,
+          StandardCopyOption.ATOMIC_MOVE)
+        catch {
+          case e: Throwable =>
+            Files.move(aside.toPath, finalDir.toPath,
+              StandardCopyOption.ATOMIC_MOVE)
+            throw e
+        }
+        graft.ops.Layout.deleteRecursively(aside)
+      } else Files.move(scratch.toPath, finalDir.toPath,
+        StandardCopyOption.ATOMIC_MOVE)
+      name -> spark.read.parquet(finalDir.getAbsolutePath)
+    }
   }
 
-  /** Per-table (name, schema, streaming row iterator) for every table in
-    * the file. Iterators decode lazily off the open [[Reader]] — the
-    * caller must fully consume them BEFORE closing it. `roots` restricts
-    * the walk to those subtrees of the table's b-tree ([[scanLayout]]).
+  /** (schema, streaming row iterator) of `table`, or None when the file
+    * has no such table. The iterator decodes lazily off the open
+    * [[Reader]] — the caller must fully consume it BEFORE closing it.
+    * `roots` restricts the walk to those subtrees of the table's b-tree
+    * ([[scanLayout]]). Only `table` is validated, so a read never fails
+    * because an UNRELATED table in the file is virtual / unparseable (FTS
+    * shadow tables are common).
     */
-  private[sources] def tableIterators(db: Reader, path: String,
-      only: Option[String] = None, roots: Option[Seq[Int]] = None):
-      Seq[(String, StructType, Iterator[Row])] = {
-      // `only` restricts BEFORE any per-table validation: the connector's
-      // single-table read must not fail because an UNRELATED table in the
-      // file is virtual / unparseable (FTS shadow tables are common)
-      val tables = db.masterTables()
-        .filter(t => only.forall(_ == t._1))
-      tables.map { case (name, rootPage, createSql) =>
+  private def tableIterator(db: Reader, path: String, table: String,
+      roots: Option[Seq[Int]]): Option[(StructType, Iterator[Row])] =
+      db.masterTables().find(_._1 == table).map { case (name, rootPage, createSql) =>
         val bodyEndIdx = bodyEnd(createSql)
         // virtual tables (FTS, rtree, …) have no b-tree of their own —
         // rootpage 0 — and their content lives in module shadow tables
@@ -253,9 +236,8 @@ object SqliteFile {
               Row.fromSeq(vals)
             }
           }
-        (name, schema, rows)
+        (schema, rows)
       }
-  }
 
   /** True when the table options after the column-list body say WITHOUT
     * ROWID, in any combination/order with STRICT (3.37+ allows "WITHOUT
@@ -584,7 +566,7 @@ object SqliteFile {
   }
 
   /** Page-at-a-time binary reader. Not thread-safe: each user (a scan
-    * task, a driver-side listing or ingest) opens its own.
+    * task or a driver-side listing) opens its own.
     */
   private final class Reader(path: String) {
     private val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)

@@ -1,24 +1,18 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-/** WebDataset-style tar shards — the interchange format for multimodal
-  * training corpora (a shard is a plain `.tar`; each sample is one or
-  * more adjacent entries named `<key>.<ext>`; trainers stream shards
-  * sequentially and shuffle at the shard level). Spark writes and reads
-  * them here with a self-contained USTAR (POSIX.1-1988) implementation —
-  * fixed 512-byte headers, octal fields, the space-initialized checksum —
-  * so shards interoperate with `tar`/`tarfile` and no archive library is
-  * needed.
+/** The USTAR (POSIX.1-1988) codec behind WebDataset-style tar shards — the
+  * interchange format for multimodal training corpora (a shard is a plain
+  * `.tar`; each sample is one or more adjacent entries named
+  * `<key>.<ext>`; trainers stream shards sequentially and shuffle at the
+  * shard level). Fixed 512-byte headers, octal fields, the
+  * space-initialized checksum — so shards interoperate with `tar`/`tarfile`
+  * and no archive library is needed.
   *
-  * Scale shape: one task per shard group (rows arrive clustered and
-  * sorted), each streaming its rows straight into one sequential file —
-  * the write parallelizes across shards, payloads never shuffle twice,
-  * and the reader parallelizes across shard FILES (headers tell it where
-  * every entry is without scanning payload bytes... though tar, having no
-  * index, is always a sequential read per shard — exactly the access
-  * pattern trainers use it for).
+  * Spark reads and writes shards through the `graft-tar` DataSourceV2
+  * table ([[graft.sources.tarv2.TarDataSource]]), which encodes entries
+  * with [[entryBytes]] and decodes headers with [[parseHeader]].
+  * [[readEntries]] is a plain sequential decoder of one archive stream,
+  * the reference the specs check shard bytes against.
   */
 object Tar {
 
@@ -77,9 +71,9 @@ object Tar {
 
   /** Validate one 512-byte USTAR header block: verifies the checksum and
     * decodes (name, payload size, is-regular-file). Returns None on the
-    * end-of-archive zero block. Shared by the inline reader below and the
-    * DataSourceV2 connector ([[graft.sources.tarv2]]), so the two paths
-    * cannot drift on header semantics.
+    * end-of-archive zero block. Shared by [[readEntries]] and the
+    * `graft-tar` reader ([[graft.sources.tarv2]]), so the two cannot drift
+    * on header semantics.
     */
   private[sources] def parseHeader(h: Array[Byte],
       context: String): Option[(String, Long, Boolean)] = {
@@ -145,126 +139,4 @@ object Tar {
         val e = nextEntry; nextEntry = null; e
       }
     }
-
-  /** Write `df` as `dir/shard-<value>.tar` files. Required columns:
-    * `shardCol` (integral shard id), `nameCol` (entry name, ≤100 bytes,
-    * unique per shard), `payloadCol` (binary). Rows cluster by shard
-    * (each value lands in ONE task) and entries are written in name
-    * order — deterministic shard bytes. Returns the shard file names.
-    *
-    * Commit protocol: tasks write into a dot-prefixed staging dir and
-    * the export lands in `dir` only after the WHOLE job succeeds (stale
-    * shards deleted, staged files renamed in) — a failed export can
-    * never leave a partial shard SET readable as data (the per-task
-    * cleanup below additionally guarantees no truncated individual
-    * file), and the previous export stays readable until the new one
-    * commits.
-    */
-  def writeShards(df: DataFrame, dir: String, shardCol: String,
-      nameCol: String, payloadCol: String): Seq[String] = {
-    val dirF = new java.io.File(dir)
-    dirF.mkdirs()
-    val staging = new java.io.File(dirF, ".__staging__")
-    def deleteStaging(): Unit = {
-      def del(f: java.io.File): Unit = {
-        if (f.isDirectory)
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(del)
-        f.delete(); ()
-      }
-      del(staging)
-    }
-    deleteStaging() // stale crashed export
-    staging.mkdirs()
-    val stagingPath = staging.getAbsolutePath
-    val rows = df.select(col(shardCol).cast("long").as("s"),
-        col(nameCol).cast("string").as("n"), col(payloadCol).as("p"))
-      .repartition(col("s"))
-      .sortWithinPartitions("s", "n")
-    val staged = rows.mapPartitions { it =>
-      // partition holds whole shards, rows sorted (shard, name): stream
-      // each shard straight into its file, switching on shard change
-      var out: java.io.OutputStream = null
-      var curFile: java.io.File = null
-      var cur = Long.MinValue
-      var files = List.empty[String]
-      var lastName: String = null
-      def close(): Unit = if (out != null) {
-        out.write(new Array[Byte](BLOCK * 2)) // end-of-archive blocks
-        out.close(); out = null
-      }
-      // on ANY failure mid-shard (e.g. the duplicate-name require), close
-      // the stream and delete the in-progress file — a truncated archive
-      // without end-of-archive blocks must not be readable back as data
-      try {
-        it.foreach { r =>
-          val s = r.getLong(0); val n = r.getString(1)
-          val p = r.getAs[Array[Byte]](2)
-          if (s != cur) {
-            close(); cur = s; lastName = null
-            curFile = new java.io.File(stagingPath, s"shard-$s.tar")
-            files ::= curFile.getName
-            out = new java.io.BufferedOutputStream(
-              new java.io.FileOutputStream(curFile), 1 << 16)
-          }
-          require(n != lastName,
-            s"duplicate entry name '$n' in shard $s — keys must be unique")
-          lastName = n
-          out.write(entryBytes(n, p))
-        }
-        close()
-      } catch {
-        case e: Throwable =>
-          if (out != null) {
-            try out.close() catch { case _: Throwable => () }
-            out = null
-          }
-          if (curFile != null) curFile.delete()
-          throw e
-      }
-      files.reverseIterator
-    }(org.apache.spark.sql.Encoders.STRING)
-    val written =
-      try staged.collect().toSeq.sorted
-      catch { case e: Throwable => deleteStaging(); throw e }
-    // COMMIT: only now remove the previous export and rename the staged
-    // shards in (same-filesystem moves — the staging dir lives inside
-    // `dir` precisely so these never degrade to copies)
-    Option(dirF.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.matches("shard-\\d+\\.tar"))
-      .foreach(_.delete())
-    written.foreach { n =>
-      java.nio.file.Files.move(
-        new java.io.File(staging, n).toPath,
-        new java.io.File(dirF, n).toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
-    deleteStaging()
-    written
-  }
-
-  /** Read every `shard-*.tar` under `dir` back as (shard_file, name,
-    * payload) — one task per shard file, checksum-verified.
-    */
-  def readShards(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val files = Option(new java.io.File(dir).listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.endsWith(".tar"))
-      .map(_.getAbsolutePath).sorted.toSeq
-    require(files.nonEmpty, s"no .tar shards under '$dir'")
-    spark.sparkContext.parallelize(files, files.size)
-      .flatMap { f =>
-        // STREAM the shard: one entry in memory at a time (shards are
-        // routinely ~1 GB — materializing a whole shard per task would
-        // defeat the sequential-access design). The stream closes with
-        // the task, covering both exhaustion and mid-read task kills.
-        val in = new java.io.BufferedInputStream(
-          new java.io.FileInputStream(f), 1 << 16)
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => in.close()))
-        val base = new java.io.File(f).getName
-        readEntries(in, f).map { case (n, p) => (base, n, p) }
-      }
-      .toDF("shard_file", "name", "payload")
-  }
 }

@@ -18,12 +18,13 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.Tar
 
-/** WebDataset tar shards as a first-class DataSourceV2 table:
-  * `spark.read.format("graft-tar").load(dir)` — the Catalyst-integrated
-  * sibling of [[graft.sources.Tar.readShards]] (which parallelizes via an
-  * RDD and always materializes payloads).
+/** WebDataset tar shards as a first-class DataSourceV2 table — the one
+  * reader and writer of the format: `spark.read.format("graft-tar")
+  * .load(dir)` and `df.write.format("graft-tar").mode(...).save(dir)`.
+  * Entries are encoded and headers decoded by the USTAR codec in
+  * [[graft.sources.Tar]].
   *
-  * What the connector integration buys at 100 TB, beyond the RDD reader:
+  * What the connector integration buys at 100 TB:
   *
   *  - **Shard pruning**: filters on `shard_file` (=, IN, prefix, suffix)
   *    are pushed into planning, so excluded shard FILES are never opened —

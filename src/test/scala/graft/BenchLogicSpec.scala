@@ -2,60 +2,59 @@ package graft
 
 import java.nio.file.Files
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** The driver-facing bench bookkeeping: prior-round record discovery,
   * scale-factor guard, and suspect selection for the end-of-suite re-run
-  * pass. Pure JVM logic — no SparkSession.
+  * pass. Pure JVM logic — the suite's lazy SparkSession is never built.
   */
-class BenchLogicSpec extends AnyFunSuite {
-
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft_benchspec_").toFile.getAbsolutePath
+class BenchLogicSpec extends SparkSuite {
 
   private def write(dir: String, name: String, body: String): Unit =
     Files.write(java.nio.file.Paths.get(dir, name), body.getBytes("UTF-8"))
 
   test("maxBenchRound picks the MAX round number, not the file count") {
-    val d = tmpDir()
-    // a sparse layout (r03 missing) must still yield 7 — the seed/prior
-    // lookup keys off the max, so deleting an old record can't shift it
-    write(d, "BENCH_r01.json", "{}")
-    write(d, "BENCH_r02.json", "{}")
-    write(d, "BENCH_r07.json", "{}")
-    assert(Bench.maxBenchRound(d).contains(7L))
+    withTempDir("graft_benchspec_") { d =>
+      // a sparse layout (r03 missing) must still yield 7 — the seed/prior
+      // lookup keys off the max, so deleting an old record can't shift it
+      write(d, "BENCH_r01.json", "{}")
+      write(d, "BENCH_r02.json", "{}")
+      write(d, "BENCH_r07.json", "{}")
+      assert(Bench.maxBenchRound(d).contains(7L))
+    }
   }
 
   test("maxBenchRound is None on an empty or missing dir") {
-    assert(Bench.maxBenchRound(tmpDir()).isEmpty)
+    withTempDir("graft_benchspec_")(d => assert(Bench.maxBenchRound(d).isEmpty))
     assert(Bench.maxBenchRound("/nonexistent/graft").isEmpty)
   }
 
   test("priorRoundMins reads the max-round record and keeps positive mins") {
-    val d = tmpDir()
-    write(d, "BENCH_r04.json",
-      """{"parsed":{"sf":"/old/sf0.1","queries":{"q_a":9.9}}}""")
-    write(d, "BENCH_r05.json",
-      """{"parsed":{"sf":"/root/testdata/sf0.1",
-        |"queries":{"q_a":0.25,"q_b":1.5,"q_bad":-1.0}}}""".stripMargin)
-    val m = Bench.priorRoundMins("/root/testdata/sf0.1", d)
-    assert(m == Map("q_a" -> 0.25, "q_b" -> 1.5)) // r05 wins; -1 dropped
+    withTempDir("graft_benchspec_") { d =>
+      write(d, "BENCH_r04.json",
+        """{"parsed":{"sf":"/old/sf0.1","queries":{"q_a":9.9}}}""")
+      write(d, "BENCH_r05.json",
+        """{"parsed":{"sf":"/root/testdata/sf0.1",
+          |"queries":{"q_a":0.25,"q_b":1.5,"q_bad":-1.0}}}""".stripMargin)
+      val m = Bench.priorRoundMins("/root/testdata/sf0.1", d)
+      assert(m == Map("q_a" -> 0.25, "q_b" -> 1.5)) // r05 wins; -1 dropped
+    }
   }
 
   test("priorRoundMins is empty when the prior round measured another sf") {
-    val d = tmpDir()
-    write(d, "BENCH_r05.json",
-      """{"parsed":{"sf":"/root/testdata/sf0.01","queries":{"q_a":0.25}}}""")
-    assert(Bench.priorRoundMins("/root/testdata/sf0.1", d).isEmpty)
-    // ...but dir-spelling differences of the SAME sf still match
-    assert(Bench.priorRoundMins("/elsewhere/sf0.01/", d) ==
-      Map("q_a" -> 0.25))
+    withTempDir("graft_benchspec_") { d =>
+      write(d, "BENCH_r05.json",
+        """{"parsed":{"sf":"/root/testdata/sf0.01","queries":{"q_a":0.25}}}""")
+      assert(Bench.priorRoundMins("/root/testdata/sf0.1", d).isEmpty)
+      // ...but dir-spelling differences of the SAME sf still match
+      assert(Bench.priorRoundMins("/elsewhere/sf0.01/", d) ==
+        Map("q_a" -> 0.25))
+    }
   }
 
   test("priorRoundMins survives malformed JSON") {
-    val d = tmpDir()
-    write(d, "BENCH_r05.json", "not json at all {")
-    assert(Bench.priorRoundMins("/root/testdata/sf0.1", d).isEmpty)
+    withTempDir("graft_benchspec_") { d =>
+      write(d, "BENCH_r05.json", "not json at all {")
+      assert(Bench.priorRoundMins("/root/testdata/sf0.1", d).isEmpty)
+    }
   }
 
   test("pickSuspects applies both the 1.5x ratio and the 50 ms floor") {
@@ -88,13 +87,15 @@ class BenchLogicSpec extends AnyFunSuite {
   }
 
   test("localPriorMins reads bench_last.json under the same sf guard") {
-    val d = tmpDir()
-    write(d, "bench_last.json",
-      """{"metric":"total","queries":{"q_a":0.5,"q_bad":-1.0},
-        |"sf":"/root/testdata/sf0.1"}""".stripMargin)
-    assert(Bench.localPriorMins("/elsewhere/sf0.1", d) == Map("q_a" -> 0.5))
-    assert(Bench.localPriorMins("/root/testdata/sf0.01", d).isEmpty)
-    assert(Bench.localPriorMins("/root/testdata/sf0.1", tmpDir()).isEmpty)
+    withTempDir("graft_benchspec_") { d =>
+      write(d, "bench_last.json",
+        """{"metric":"total","queries":{"q_a":0.5,"q_bad":-1.0},
+          |"sf":"/root/testdata/sf0.1"}""".stripMargin)
+      assert(Bench.localPriorMins("/elsewhere/sf0.1", d) == Map("q_a" -> 0.5))
+      assert(Bench.localPriorMins("/root/testdata/sf0.01", d).isEmpty)
+      withTempDir("graft_benchspec_")(e =>
+      assert(Bench.localPriorMins("/root/testdata/sf0.1", e).isEmpty))
+    }
   }
 
   test("pickSuspects ranks worst offenders first and caps the pass") {

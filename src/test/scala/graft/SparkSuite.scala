@@ -15,4 +15,10 @@ trait SparkSuite extends AnyFunSuite {
     .getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Runs `body` on a fresh temp dir, then deletes the dir and all in it. */
+  def withTempDir[T](prefix: String)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(dir.toString) finally graft.ops.Layout.deleteRecursively(dir)
+  }
 }

@@ -13,12 +13,6 @@ class Api2Spec extends SparkSuite {
 
   lazy val db: Database = Database.open(spark, sfDir)
 
-  /** A fresh temp dir for one test, deleted when the test ends. */
-  private def withTempDir[T](prefix: String)(body: String => T): T = {
-    val dir = Files.createTempDirectory(prefix).toFile
-    try body(dir.toString) finally graft.ops.Layout.deleteRecursively(dir)
-  }
-
   test("CSV ingestion (reference convert_csvs_to_db, utils.py:214-239)") {
     withTempDir("graftcsv") { dir =>
       Files.write(java.nio.file.Paths.get(dir, "people.csv"),

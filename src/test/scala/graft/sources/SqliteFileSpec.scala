@@ -32,31 +32,42 @@ class SqliteFileSpec extends SparkSuite {
     }
   }
 
-  test("ingest streams to parquet in bounded batches, identical to open") {
-    val path = res("forestation_subset.db")
-    val outDir = java.nio.file.Files
-      .createTempDirectory("sqlite_ingest_").toString
-    try {
-      // batchRows=7 forces every table through MANY append batches — the
-      // bounded-driver-memory path — and the parquet round trip must match
-      // the scan-backed open row for row
-      val ingested = SqliteFile.ingest(spark, path, outDir, batchRows = 7)
+  test("ingest writes each table's split scan to parquet, identical to open") {
+    val path = res("sqlite_edge_cases.db")
+    withTempDir("sqlite_ingest_") { outDir =>
+      // debris of a crashed earlier ingest: both must be gone afterwards
+      for (d <- Seq(".__ingesting__many", ".__old__many"))
+        assert(new java.io.File(s"$outDir/$d/stale").mkdirs())
+      val ingested = SqliteFile.ingest(spark, path, outDir)
       val opened = SqliteFile.open(spark, path)
       assert(ingested.keySet === opened.keySet)
+      def parquetFiles(t: String) = new java.io.File(s"$outDir/$t").listFiles()
+        .count(_.getName.endsWith(".parquet"))
       for (t <- opened.keySet) {
         assert(ingested(t).schema === opened(t).schema, s"schema mismatch in $t")
         assert(ingested(t).count() === opened(t).count(), s"count mismatch in $t")
         assert(ingested(t).exceptAll(opened(t)).isEmpty &&
           opened(t).exceptAll(ingested(t)).isEmpty, s"row set mismatch in $t")
-        // really parquet-backed
-        assert(new java.io.File(s"$outDir/$t").listFiles()
-          .exists(_.getName.endsWith(".parquet")), s"$t not parquet-backed")
+        assert(parquetFiles(t) > 0, s"$t not parquet-backed")
       }
-      // re-ingest replaces cleanly (no doubled rows from stale appends)
-      val again = SqliteFile.ingest(spark, path, outDir, batchRows = 1000)
+      // `many` spans several scan tasks, and each task writes its own file
+      assert(opened("many").rdd.getNumPartitions > 1)
+      assert(parquetFiles("many") > 1)
+      assert(new java.io.File(outDir).list().filter(_.startsWith(".")).isEmpty,
+        "stale scratch or aside dirs left behind")
+      // re-ingest replaces the old copy (no doubled rows, no old files)
+      val oldFiles = new java.io.File(s"$outDir/many").list()
+        .filter(_.endsWith(".parquet")).toSet
+      val again = SqliteFile.ingest(spark, path, outDir)
       for (t <- opened.keySet)
         assert(again(t).count() === opened(t).count(), s"re-ingest doubled $t")
-    } finally graft.ops.Layout.deleteRecursively(new java.io.File(outDir))
+      assert(new java.io.File(s"$outDir/many").list().toSet.intersect(oldFiles).isEmpty)
+      // a table without rows still lands, with its schema
+      val withEmpty = res("sqlite_empty_table.db")
+      val empty = SqliteFile.ingest(spark, withEmpty, outDir)("empty")
+      assert(empty.count() === 0)
+      assert(empty.schema === SqliteFile.open(spark, withEmpty)("empty").schema)
+    }
   }
 
   test("record decode: every integer width, floats, text, blobs, NULLs, IPK rowids") {
@@ -156,6 +167,14 @@ class SqliteFileSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(aruba === Seq((2016L, 4.199999869)))
     db.exit()
+  }
+
+  test("Database.open on a .db file honours populateCache") {
+    val db = Database.open(spark, res("forestation_subset.db"), populateCache = true)
+    try {
+      assert(db.cacheReady)
+      assert(db.cache.size > 0)
+    } finally db.exit()
   }
 
   test("opens the reference's own forestation.db (when present)") {
